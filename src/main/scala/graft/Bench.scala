@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 object Bench {
   /** 1-minute load average — environmental evidence carried in the bench
@@ -11,7 +12,7 @@ object Bench {
     try java.nio.file.Files
       .readString(java.nio.file.Paths.get("/proc/loadavg"))
       .split("\\s+")(0).toDouble
-    catch { case _: Throwable => -1.0 }
+    catch { case NonFatal(_) => -1.0 }
 
   /** Cumulative CPU steal ticks from /proc/stat (field 8 of the `cpu`
     * line) — nonzero deltas mean a VM neighbor took cycles the guest
@@ -27,7 +28,7 @@ object Bench {
         .find(_.startsWith("cpu ")).getOrElse("")
       val f = cpu.trim.split("\\s+")
       if (f.length > 8) f(8).toLong else -1L
-    } catch { case _: Throwable => -1L }
+    } catch { case NonFatal(_) => -1L }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -50,7 +51,7 @@ object Bench {
       val warmDir = "/root/testdata/sf0.001"
       SparkEntry.queries.foreach { case (_, fn) =>
         try fn(spark, warmDir).queryExecution.toRdd.count()
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () }
         finally graft.operators.DedupOps.releaseShingleCaches()
       }
       // evict the warm-up scale's session shingle corpora before timing
@@ -90,7 +91,7 @@ object Bench {
           .filter { case (k, v) => v > 0 && nameSet(k) }
           .toMap
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           System.err.println(
             s"GRAFT_BENCH_WARN full baseline unreadable at $baselinePath " +
               s"(${e.getClass.getSimpleName}) — regression gate and dispersion " +
@@ -119,7 +120,7 @@ object Bench {
             // driver-side collect.
             fn(spark, sfDir).queryExecution.toRdd.count()
             Some((System.nanoTime() - t0) / 1e9)
-          } catch { case _: Throwable => None }
+          } catch { case NonFatal(_) => None }
         perRep(name) = perRep(name) :+ t
         lMax = math.max(lMax, load1())
       }

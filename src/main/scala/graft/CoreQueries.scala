@@ -97,7 +97,7 @@ object CoreQueries {
     }),
     // P1/P3/A3/A4/F3 — dense linear histogram.
     "hist_linear" -> ((s, dir) =>
-      HistogramOps.computeHistogram(Tables.lineitem(s, dir), "l_quantity", BinMethod.Linear)),
+      HistogramRunner.run(Tables.lineitem(s, dir), HistogramConfig("l_quantity"))),
     // Same semantics via the single-shuffle dense-vector Aggregator
     // (graft.functions.DenseHistogram) — shares hist_linear's oracle.
     "hist_linear_dense" -> ((s, dir) => {
@@ -111,22 +111,22 @@ object CoreQueries {
     // differ in the last ulp, so the verify surface rounds to 6 decimals
     // (both sides) — counts are exact.
     "hist_log" -> ((s, dir) =>
-      HistogramOps
-        .computeHistogram(Tables.events(s, dir), "value", BinMethod.Log)
+      HistogramRunner
+        .run(Tables.events(s, dir), HistogramConfig("value", BinMethod.Log))
         .select(round(col("value"), 6).as("value"), col("cnt"))),
     // P2/P4 — log histogram with a negative-min derived column, exercising
     // the offset = |min| + 1 path (compute_histogram/main.py:166-168).
     "hist_log_offset" -> ((s, dir) => {
       val shifted = Tables.events(s, dir).select((col("value") - lit(250.0)).as("v"))
-      HistogramOps
-        .computeHistogram(shifted, "v", BinMethod.Log)
+      HistogramRunner
+        .run(shifted, HistogramConfig("v", BinMethod.Log))
         .select(round(col("value"), 6).as("value"), col("cnt"))
     }),
     // Flagship: full two-pass pipeline + the reference decile SQL
     // (A5/A6/W1/W2/J1/O1/P5).
     "hist_deciles" -> ((s, dir) =>
       PercentileOps.deciles(
-        HistogramOps.computeHistogram(Tables.lineitem(s, dir), "l_quantity", BinMethod.Linear))),
+        HistogramRunner.run(Tables.lineitem(s, dir), HistogramConfig("l_quantity")))),
     // Round 9: the streaming cut-key twin's read path run in batch — the
     // decile boundary bins and their value intervals read off the
     // incremental bin-count STATE (streaming/StreamingQuantiles; the same

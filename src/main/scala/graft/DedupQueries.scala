@@ -87,7 +87,8 @@ object DedupQueries {
     // LSH candidate generation (20 bands × 6 planes) + exact cosine
     // verify. Output ⊆ dedup_embedding at the same threshold; the recall
     // trade at this LOW threshold is documented and measured
-    // (SimilarityOps.nearDupPairsLsh scaladoc, EmbedScaleStress) — at real
+    // (SimilarityOps.nearDupPairsLsh scaladoc; PERF.md §"Round 12:
+    // embedding-dedup size route + exact-vs-LSH crossover") — at real
     // near-dup thresholds (cos ≥ 0.9) the filter is ~lossless.
     "dedup_embedding_lsh" -> ((s, dir) =>
       SimilarityOps.nearDupPairsLsh(

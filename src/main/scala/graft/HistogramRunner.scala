@@ -1,9 +1,10 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, greatest, least, lit, max, min}
 
 import graft.core.{BinMethod, BinSpec}
-import graft.operators.{HistogramOps, PercentileOps}
+import graft.operators.HistogramOps
 
 /** The reference's CLI surface (E3 — reference: compute_histogram/main.py:17-57,
   * README.md:22-31) as a config object + runner.
@@ -27,20 +28,19 @@ final case class HistogramConfig(
 
 object HistogramRunner {
 
+  /** Pixels per tile the stub reader emits for offline `s3://` tile URIs
+    * (decoded GeoTIFFs report their own size). */
+  val StubPixelsPerTile = 100000L
+
   /** Run the configured pipeline. `minmaxOnly` returns the 1-row stats
-    * relation; otherwise the dense `(value, cnt)` histogram.
+    * relation; otherwise the dense `(value, cnt)` histogram from two jobs:
+    * stats pass → `BinSpec` derived on the driver (1 collected row) →
+    * histogram pass, the reference's pass-1/pass-2 shape (main.py:53-57).
     */
   def run(df: DataFrame, cfg: HistogramConfig): DataFrame = {
     val values = HistogramOps.validValues(df, cfg.valueCol)
-    if (cfg.minmaxOnly) {
-      import org.apache.spark.sql.functions._
-      val base = values.agg(min(col("value")).as("min_value"), max(col("value")).as("max_value"))
-      if (cfg.clampToZero)
-        base.select(
-          least(col("min_value"), lit(0.0)).as("min_value"),
-          greatest(col("max_value"), lit(0.0)).as("max_value"))
-      else base
-    } else {
+    if (cfg.minmaxOnly) minMaxRow(values, "value", "value", cfg.clampToZero)
+    else {
       val (mn, mx) = (cfg.minValue, cfg.maxValue) match {
         case (Some(a), Some(b)) => (a, b)
         case _                  => HistogramOps.minMax(values, cfg.clampToZero)
@@ -49,11 +49,50 @@ object HistogramRunner {
     }
   }
 
-  /** Histogram + decile summary in one call (the full reference workflow:
-    * histogram.csv → compute_histogram.sql).
+  /** The 1-row `(min_value, max_value)` stats relation over `stats`'
+    * `minCol` / `maxCol`. `clampToZero` widens the range to include 0 like
+    * the reference's zero-initialized accumulators (main.py:131-132).
     */
-  def runWithDeciles(df: DataFrame, cfg: HistogramConfig): DataFrame =
-    PercentileOps.deciles(run(df, cfg.copy(minmaxOnly = false)))
+  private def minMaxRow(
+      stats: DataFrame,
+      minCol: String,
+      maxCol: String,
+      clampToZero: Boolean): DataFrame = {
+    val (mn, mx) = (min(col(minCol)), max(col(maxCol)))
+    if (clampToZero)
+      stats.agg(least(mn, lit(0.0)).as("min_value"), greatest(mx, lit(0.0)).as("max_value"))
+    else stats.agg(mn.as("min_value"), mx.as("max_value"))
+  }
+
+  /** A DSv2 raster scan of a tile list in the given `mode`. The list path
+    * streams straight into the scan's partition planning — no driver-side
+    * collect()-and-comma-join of URIs (at 10⁵-10⁶ tiles that is a driver
+    * bottleneck and a multi-MB option string).
+    */
+  private def readTiles(
+      spark: SparkSession,
+      tileListPath: String,
+      pixelsPerTile: Long,
+      mode: String,
+      extra: Map[String, String] = Map.empty): DataFrame = {
+    val base = spark.read
+      .format("graft.sources.raster.RasterSource")
+      .option("tileListPath", tileListPath)
+      .option("pixelsPerTile", pixelsPerTile)
+      .option("mode", mode)
+    extra.foldLeft(base) { case (r, (k, v)) => r.option(k, v) }.load()
+  }
+
+  /** Pass 1 over a tile list: `mode=stats` sends ONE row per tile across
+    * the scan boundary, then the global min/max row. */
+  private def tileStats(
+      spark: SparkSession,
+      tileListPath: String,
+      pixelsPerTile: Long,
+      clampToZero: Boolean): DataFrame = {
+    val perTile = readTiles(spark, tileListPath, pixelsPerTile, "stats")
+    minMaxRow(perTile, "min_value", "max_value", clampToZero)
+  }
 
   /** The fully source-pushed two-pass pipeline over the DSv2 raster scan:
     * pass 1 reads `mode=stats` (ONE row per tile crosses the scan
@@ -70,26 +109,17 @@ object HistogramRunner {
       tileListPath: String,
       pixelsPerTile: Long,
       cfg: HistogramConfig): DataFrame = {
-    import org.apache.spark.sql.functions._
-    def read(mode: String, extra: Map[String, String] = Map.empty) = {
-      val base = spark.read
-        .format("graft.sources.raster.RasterSource")
-        .option("tileListPath", tileListPath)
-        .option("pixelsPerTile", pixelsPerTile)
-        .option("mode", mode)
-      extra.foldLeft(base) { case (r, (k, v)) => r.option(k, v) }.load()
-    }
     val (mn, mx) = (cfg.minValue, cfg.maxValue) match {
       case (Some(a), Some(b)) => (a, b)
       case _ =>
-        val row = read("stats")
-          .agg(min(col("min_value")), max(col("max_value")))
-          .head()
-        val (a, b) = if (row.isNullAt(0)) (0.0, 0.0) else (row.getDouble(0), row.getDouble(1))
-        if (cfg.clampToZero) (math.min(a, 0.0), math.max(b, 0.0)) else (a, b)
+        val row = tileStats(spark, tileListPath, pixelsPerTile, cfg.clampToZero).head()
+        if (row.isNullAt(0)) (0.0, 0.0) else (row.getDouble(0), row.getDouble(1))
     }
     val spec = BinSpec.derive(mn, mx, cfg.method)
-    val binned = read(
+    val binned = readTiles(
+      spark,
+      tileListPath,
+      pixelsPerTile,
       "hist",
       Map(
         "binLo" -> spec.lo.toString,
@@ -201,47 +231,15 @@ object HistogramRunner {
     * written relation (stats row for `--minmax_only`, else the histogram).
     */
   def runCli(spark: SparkSession, cli: CliArgs): DataFrame = {
-    val path = cli.source
-    val pixels = sys.env.getOrElse("SPARK_GRAFT_PIXELS", "100000").toLong
-    val pushed = path.endsWith(".txt") &&
-      !sys.env.get("SPARK_GRAFT_PUSHED").contains("0")
+    // tile lists run the per-tile stats/hist passes INSIDE the scan —
+    // bins, not pixels, cross the scan boundary (PERF.md §"Round 3:
+    // source-pushed per-tile aggregation": 7.5× cold / 2× warm over the
+    // raw pixel scan at 32×2M px; the gap is the pixel volume at real sizes)
     val histo0 =
-      if (pushed && cli.cfg.minmaxOnly) {
-        // stats-pushed minmax: one row per tile crosses the scan boundary
-        import org.apache.spark.sql.functions._
-        val stats = spark.read
-          .format("graft.sources.raster.RasterSource")
-          .option("tileListPath", path)
-          .option("pixelsPerTile", pixels.toString)
-          .option("mode", "stats")
-          .load()
-          .agg(min(col("min_value")).as("min_value"), max(col("max_value")).as("max_value"))
-        if (cli.cfg.clampToZero)
-          stats.select(
-            least(col("min_value"), lit(0.0)).as("min_value"),
-            greatest(col("max_value"), lit(0.0)).as("max_value"))
-        else stats
-      } else if (pushed) {
-        // default for tile lists: the per-tile stats/hist passes run
-        // INSIDE the scan (mode=stats / mode=hist readers) — bins, not
-        // pixels, cross the scan boundary (RasterPushStress: 7.5× cold /
-        // 2× warm at 32×2M px; the gap is the pixel volume at real sizes)
-        runPushed(spark, path, pixels, cli.cfg)
-      } else {
-        val source =
-          if (path.endsWith(".txt")) {
-            // the list path streams straight into the DSv2 scan's partition
-            // planning — no driver-side collect()-and-comma-join of URIs
-            // (round-1 review: at 10⁵-10⁶ tiles that was a driver bottleneck
-            // and a multi-MB option string)
-            spark.read
-              .format("graft.sources.raster.RasterSource")
-              .option("tileListPath", path)
-              .option("pixelsPerTile", pixels.toString)
-              .load()
-          } else spark.read.parquet(path)
-        run(source, cli.cfg)
-      }
+      if (!cli.source.endsWith(".txt")) run(spark.read.parquet(cli.source), cli.cfg)
+      else if (cli.cfg.minmaxOnly)
+        tileStats(spark, cli.source, StubPixelsPerTile, cli.cfg.clampToZero)
+      else runPushed(spark, cli.source, StubPixelsPerTile, cli.cfg)
     if (cli.cfg.minmaxOnly) {
       val row = histo0.head()
       // the reference's click.echo surface (main.py:51-52)

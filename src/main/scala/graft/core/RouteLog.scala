@@ -47,8 +47,5 @@ object RouteLog {
     b.result()
   }
 
-  /** True when any recent firing mentions `route` (test pin helper). */
-  def fired(route: String): Boolean = recent().exists(_.startsWith(s"$route:"))
-
   private[graft] def reset(): Unit = recentQ.clear()
 }

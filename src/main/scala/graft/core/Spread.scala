@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{lit, pmod, xxhash64}
+import scala.util.control.NonFatal
 
 /** Scan-starvation predicate for size-routed plan shapes.
   *
@@ -54,7 +55,7 @@ object Spread {
     } catch {
       // a plan whose stats can't be read (e.g. a streaming relation mid
       // micro-batch) keeps the scale shape — false is the safe direction
-      case _: Throwable => false
+      case NonFatal(_) => false
     }
 
   /** The measured-winning escape shape (round 14, guide §2.4/§2.5), shared

@@ -40,7 +40,8 @@ object ClusterOps {
     // labels start as ALL nodes (singletons included). The tempting
     // alternative — iterate over edge-touched nodes only and left-join
     // singletons back at the end — was measured SLOWER at sf0.1
-    // (tools/CCPhases: rounds 0.67+1.20 s + 1.72 s final join vs
+    // (PERF.md §"Round 4 (later): session-memoized jaccard pair relation":
+    // rounds 0.67+1.20 s + 1.72 s final join vs
     // 0.41+0.58+0.40 s this way): the extra corpus-wide join and the
     // distinct-over-edges gen0 lineage cost more than iterating the full
     // 5000-row label relation ever did. At cluster scale the trade can
@@ -135,11 +136,11 @@ object ClusterOps {
     // — deg and every iteration read the cache; deriving deg from the raw
     // lineage would re-evaluate the (expensive) pair join per consumer
     // Materialize the EXPENSIVE inputs once, then keep the fixed-count
-    // rank recurrence lazy. Measured at sf0.1 (PagerankPhases, idle
-    // host): the lazy depth-3 chain over warm caches runs in ~0.65 s as
-    // ONE job, vs ~3.5 s for per-generation persist+count round-trips —
-    // at a FIXED small iteration count the per-round cache writes and
-    // actions are pure overhead. (Contrast connectedComponents, whose
+    // rank recurrence lazy. Measured at sf0.1 (PERF.md §"Round 4: the
+    // dedup_pagerank plan", idle host): the lazy depth-3 chain over warm
+    // caches runs in ~0.65 s as ONE job, vs ~3.5 s for per-generation
+    // persist+count round-trips — at a FIXED small iteration count the
+    // per-round cache writes and actions are pure overhead. (Contrast connectedComponents, whose
     // VARIABLE round count needs a per-round convergence action anyway.)
     // The r3 19.6 s pathology was never laziness itself: the edge cache
     // was declared but never FILLED before the multi-consumer rank tree

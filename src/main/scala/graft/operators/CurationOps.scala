@@ -528,8 +528,9 @@ object CurationOps {
     * only → broadcast cut-key comparison. Same result, and the only global
     * sort left is over ≤ 4096 histogram bins. (The machinery was built
     * here in round 7 and generalized into [[RankOps]] in round 8 — the
-    * ntile-twin equivalence is property-pinned in `RankOpsSpec` plus the
-    * 1×/4×/16× `tools/LmBucketsStress` harness.)
+    * ntile-twin equivalence is property-pinned in `RankOpsSpec`; the
+    * 1×/4×/16× timings are in PERF.md §"Round 7: lmBuckets cutpoint
+    * shape".)
     *
     * PRECONDITION (RankOps bucket contract): `doc_id` is unique, so the
     * (avg_nll, doc_id) key is strictly ordered and `key ≤ cut` admits

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Deduplication operators for the training-data pipeline surface
   * (SURVEY §7.6): exact, content-fingerprint, n-gram Jaccard, MinHash+LSH
@@ -170,7 +171,7 @@ object DedupOps {
     releaseShingleCaches()
     // a backing relation may belong to an already-stopped test session —
     // releasing the survivors must not abort on it
-    sessionBacking.foreach(df => try df.unpersist(blocking = true) catch { case _: Throwable => () })
+    sessionBacking.foreach(df => try df.unpersist(blocking = true) catch { case NonFatal(_) => () })
     sessionBacking.clear()
     sessionShingleCaches.clear()
     sessionRelations.clear()
@@ -422,7 +423,8 @@ object DedupOps {
     // SHUFFLE_HASH over sort-merge for the verify joins: the streamed side
     // is the |candidates| × set-size fan-out, and sorting it degrades
     // superlinearly once partitions spill (measured 4× corpus: SMJ 20 s vs
-    // hash 9 s cold / 4 s warm — tools/DedupScaleStress). Both BUILD sides
+    // hash 9 s cold / 4 s warm — PERF.md §"Round 2: dedup pipeline
+    // scale-up"). Both BUILD sides
     // are partition-bounded — candidate pairs (thin) and the exploded
     // shingle relation, each O(input/partitions) with keys that hash
     // uniformly — exactly the case where hash join beats paying n·log n

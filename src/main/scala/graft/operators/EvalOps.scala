@@ -1889,8 +1889,9 @@ object EvalOps {
     * window was about to scan anyway — the cache makes the check
     * near-free); if it exceeds `maxScores`, the call fails loudly
     * instead of handing the single-partition cumulative window an
-    * unbounded rank. SkewStress measured exactly this failure shape:
-    * windows, not aggregations, are where unbounded cardinality bites.
+    * unbounded rank. PERF.md §"Round 12: hot-key skew evidence" measured
+    * exactly this failure shape: windows, not aggregations, are where
+    * unbounded cardinality bites.
     */
   def upliftQini(units: DataFrame, maxScores: Int = MaxQiniScores): DataFrame = {
     val dbl = (c: Column) => c.cast("double")

@@ -198,24 +198,6 @@ object HistogramOps {
       .orderBy(col("value"))
   }
 
-  /** End-to-end two-job pipeline: stats pass (A1/A2) → derive BinSpec on the
-    * driver (1 collected row) → histogram pass. Mirrors the reference's
-    * pass-1/pass-2 shape (compute_histogram/main.py:53-57).
-    */
-  def computeHistogram(
-      df: DataFrame,
-      valueCol: String,
-      method: BinMethod,
-      minValueOverride: Option[Double] = None,
-      maxValueOverride: Option[Double] = None): DataFrame = {
-    val values = validValues(df, valueCol)
-    val (mn, mx) = (minValueOverride, maxValueOverride) match {
-      case (Some(a), Some(b)) => (a, b) // user stats replace the stats pass (main.py:53-54)
-      case _                  => minMax(values)
-    }
-    histogram(values, BinSpec.derive(mn, mx, method))
-  }
-
   /** S5 — CSV sink with the reference's `"%1.2f, %d"` row format, written as
     * exactly ONE file named `histogram.csv` under `path`, matching the
     * reference's `np.savetxt("histogram.csv", ...)` single-file output

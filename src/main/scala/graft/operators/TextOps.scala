@@ -167,7 +167,8 @@ object TextOps {
     * one-shot form was O(len²·k), 625 s at sf0.01; see
     * [[winnowFingerprints]], kept as the spec-pinned cross-check), and even
     * barriered, the interpreted hash fill cost ~10 s/sf0.1 re-paid on every
-    * cache release (tools/AnalyticsScaleStress). Native kernel: no barrier,
+    * cache release (PERF.md §"Round 4 (final): analytics additions under
+    * 4× replication"). Native kernel: no barrier,
     * no transient cache, measured ~0.3 s at sf0.1 full-projection.
     */
   def winnowSummary(docs: DataFrame, k: Int = 5, w: Int = 4): DataFrame = {

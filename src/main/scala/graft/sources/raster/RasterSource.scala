@@ -115,8 +115,6 @@ final class RasterTable(
     properties: util.Map[String, String])
     extends Table
     with SupportsRead {
-  def this(tiles: String, tileListPath: String, pixelsPerTile: Long) =
-    this(tiles, tileListPath, pixelsPerTile, "values", new util.HashMap[String, String]())
   override def name(): String =
     if (tileListPath.nonEmpty) s"raster($tileListPath, $mode)"
     else s"raster(${tiles.split(",").length} tiles, $mode)"

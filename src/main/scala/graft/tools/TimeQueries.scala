@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Focused per-query timing — the full Bench procedure (warm-up at
   * sf0.001, temporally-separated reps, toRdd.count forcing) restricted
@@ -28,7 +29,7 @@ object TimeQueries {
     // warm-up: codegen/JIT on the small scale
     names.foreach(n =>
       try graft.SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").queryExecution.toRdd.count()
-      catch { case _: Throwable => () })
+      catch { case NonFatal(_) => () })
     graft.operators.DedupOps.releaseAllCaches()
     val reps = sys.env.get("SPARK_GRAFT_RUNS").map(_.toInt).getOrElse(3)
     val times = scala.collection.mutable.Map.empty[String, Vector[Double]].withDefaultValue(Vector.empty)

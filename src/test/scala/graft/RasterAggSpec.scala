@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.functions._
 
 import graft.core.BinMethod
@@ -45,13 +47,19 @@ class RasterAggSpec extends SparkSpec {
     assert(raw.count() == pushed.values.map(_._3).sum)
   }
 
+  /** The same tiles as a one-URI-per-line `.txt` tile list. */
+  private def tileList(): String = {
+    val list = Files.createTempFile("agg_tiles", ".txt")
+    Files.writeString(list, tiles.split(",").mkString("\n"))
+    list.toString
+  }
+
   test("pushed two-pass pipeline == raw pipeline, linear and log, bit-exact") {
-    val list = java.nio.file.Files.createTempFile("agg_tiles", ".txt")
-    java.nio.file.Files.writeString(list, tiles.split(",").mkString("\n"))
+    val list = tileList()
     for (method <- Seq(BinMethod.Linear, BinMethod.Log)) {
       val cfg = HistogramConfig("value", method)
       val pushed = HistogramRunner
-        .runPushed(spark, list.toString, 5000L, cfg)
+        .runPushed(spark, list, 5000L, cfg)
         .collect()
         .map(r => (r.getDouble(0), r.getLong(1)))
         .toSeq
@@ -86,5 +94,35 @@ class RasterAggSpec extends SparkSpec {
     val totalCnt = binned.agg(sum("cnt")).head().getLong(0)
     val valid = load("values", pixels = pixels).filter(!isnan(col("value"))).count()
     assert(totalCnt == valid)
+  }
+
+  test("runCli over a .txt tile list == run over the mode=values scan of the same list") {
+    val list = tileList()
+    val raw = load("values", pixels = HistogramRunner.StubPixelsPerTile.toInt)
+    def cli(cfg: HistogramConfig, out: String = "target/unused") =
+      HistogramRunner.CliArgs(list, out, 4, cfg)
+    // --minmax_only, with and without the reference's zero-init clamp
+    val mins = for (clamp <- Seq(false, true)) yield {
+      val cfg = HistogramConfig("value", minmaxOnly = true, clampToZero = clamp)
+      val got = HistogramRunner.runCli(spark, cli(cfg)).head()
+      val want = HistogramRunner.run(raw, cfg).head()
+      assert(
+        (got.getDouble(0), got.getDouble(1)) == (want.getDouble(0), want.getDouble(1)),
+        s"clampToZero=$clamp")
+      got.getDouble(0)
+    }
+    // stub pixels lie in [0, 1000): only the clamp pulls min to exactly 0
+    assert(mins(0) > 0.0 && mins(1) == 0.0)
+    // the written histogram.csv, byte for byte
+    def csv(dir: String) = Files.readString(Paths.get(dir, "histogram.csv"))
+    for (method <- Seq(BinMethod.Linear, BinMethod.Log)) {
+      val cfg = HistogramConfig("value", method)
+      val out = Files.createTempDirectory("cli_tiles").toString
+      HistogramRunner.runCli(spark, cli(cfg, out))
+      val expected = Files.createTempDirectory("cli_raw").toString
+      HistogramOps.writeCsv(HistogramRunner.run(raw, cfg), expected)
+      assert(csv(out) == csv(expected), s"method $method")
+      assert(csv(out).linesIterator.exists(!_.endsWith(", 0")), s"method $method: all bins empty")
+    }
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.core.BinMethod
 import graft.operators.HistogramOps
 
 class RasterSourceSpec extends SparkSpec {
@@ -60,7 +59,7 @@ class RasterSourceSpec extends SparkSpec {
     assert(df.schema.fieldNames.toSeq == Seq("value"))
     assert(df.count() == 3L * 5000)
     // full reference pipeline over the DSv2 source
-    val histo = HistogramOps.computeHistogram(load(), "value", BinMethod.Linear)
+    val histo = HistogramRunner.run(load(), HistogramConfig("value"))
     assert(histo.count() > 0)
     assert(
       histo.agg(sum("cnt")).head().getLong(0) ==
